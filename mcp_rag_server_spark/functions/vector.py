@@ -3,8 +3,9 @@
 Reference parity: ``Embeddings.cosine`` (reference src/embeddings.ts:77-92)
 — epsilon 1e-10, comparison truncated to the shorter vector, empty vector
 scores 0. Implemented as pure Spark SQL higher-order functions
-(``zip_with`` + ``aggregate``) so the hot path stays inside whole-stage
-codegen; no Python is involved per row.
+(``zip_with`` + ``aggregate``), so no Python is involved per row. The
+HOFs themselves are ``CodegenFallback`` in Spark 4.1: they are
+interpreted row by row inside the surrounding whole-stage-codegen stage.
 
 IMPORTANT implementation note: every expression here is built from SQL
 text (``F.expr``) with explicit, distinct lambda-variable names. Building

@@ -24,8 +24,6 @@ rounded distances.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -445,79 +443,6 @@ def n_cells(n_vectors: int) -> int:
     return max(CELL_SEEDS, -(-int(n_vectors) // TARGET_CELL_SIZE))
 
 
-#: Memoized full-table counts: :func:`cell_probes` runs an eager
-#: ``count()`` at DataFrame-CONSTRUCTION time when the caller passes
-#: no ``n_vectors`` (the seed count must be known to build the plan).
-#: Plan-only tooling (plan_lint / gen_plans) and multi-query sessions
-#: construct the probe plan many times over the SAME read-only parquet
-#: source — memoizing makes the count a once-per-source cost. Key =
-#: input file list PLUS each local file's (size, mtime), so both a
-#: rewritten directory (fresh part filenames) AND an in-place
-#: single-file regeneration (same path, new stat — the round-4
-#: fixture-refresh precedent) get fresh entries. The memo is only
-#: consulted for bare scans (no Filter/Join/Aggregate/Limit/Sample in
-#: the analyzed plan): a contract-violating filtered ``emb`` stays
-#: locally wrong instead of poisoning later full-table calls.
-_COUNT_MEMO: dict[tuple, int] = {}
-
-#: Logical nodes under which a frame's row count IS a pure property of
-#: the source files — a WHITELIST (advice r10): a blocklist of
-#: count-changing nodes silently goes stale when Spark adds one
-#: (Offset, FlatMapGroupsInPandas, ...), and a false negative poisons
-#: the full-table memo entry, while a false positive here merely pays
-#: an extra count(). Anything not listed (including every count-neutral
-#: node we could have allowed, e.g. Sort/Repartition) skips the memo.
-_COUNT_SAFE_NODES = frozenset(
-    {"Relation", "Project", "SubqueryAlias", "View"}
-)
-
-
-def _plan_nodes(plan: str) -> list[str]:
-    """Leading node names of an analyzed-plan dump's lines (tree
-    markers ``+-``/``:-``/``:`` stripped)."""
-    out = []
-    for line in plan.splitlines():
-        word = line.lstrip(" +-:")
-        tok = ""
-        for c in word:
-            if c.isalpha():
-                tok += c
-            else:
-                break
-        if tok:
-            out.append(tok)
-    return out
-
-
-def _corpus_count(df: DataFrame) -> int:
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(n not in _COUNT_SAFE_NODES for n in _plan_nodes(plan)):
-            return df.count()
-        files = sorted(df.inputFiles())
-        key_parts = []
-        for uri in files:
-            if not uri.startswith("file://"):
-                # Non-local scheme: no stat available, so an in-place
-                # overwrite would be invisible to the key (and read
-                # format/options aren't in the key either) — skip the
-                # memo rather than cache a stale count (advice r10).
-                return df.count()
-            try:
-                st = os.stat(uri[7:])
-            except OSError:
-                return df.count()
-            key_parts.append((uri, st.st_size, st.st_mtime_ns))
-        key = tuple(key_parts)
-    except Exception:  # non-file-backed plans (local relations etc.)
-        key = ()
-    if not key:
-        return df.count()
-    if key not in _COUNT_MEMO:
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
-
-
 #: SQL text of the rounded-6 squared-L2 fold between the row's
 #: ``embedding`` and one broadcast centroid struct ``cp_s`` — the
 #: SAME arithmetic (casts, fold order, rounding) as the DuckDB CTE's
@@ -641,7 +566,7 @@ def _refined_centroids(emb: DataFrame, nlist: int) -> DataFrame:
     )
 
 
-def cell_probes(emb: DataFrame, n_vectors: int | None = None) -> DataFrame:
+def cell_probes(emb: DataFrame, n_vectors: int) -> DataFrame:
     """(vec_id, cell) with CELL_PROBES rows per vector: the IVF
     coarse-assignment used as a candidate-blocking key.
 
@@ -683,14 +608,12 @@ def cell_probes(emb: DataFrame, n_vectors: int | None = None) -> DataFrame:
     PRECONDITION: ``emb`` must be the FULL embeddings table of the
     sf_dir being queried — the DuckDB oracle CTE hard-codes
     ``COUNT(*) FROM embeddings`` for the seed count, so a filtered or
-    sampled ``emb`` diverges from the oracle. Callers with a known
-    count pass ``n_vectors`` to skip the eager count Spark action
-    this otherwise runs at DataFrame-CONSTRUCTION time; without it
-    the count is memoized per input-file set (:data:`_COUNT_MEMO`),
-    so plan-only tooling (plan_lint / gen_plans) and multi-query
-    sessions pay it once per source, not once per plan build."""
-    n = _corpus_count(emb) if n_vectors is None else n_vectors
-    cent = _refined_centroids(emb, n_cells(n))
+    sampled ``emb`` diverges from the oracle. ``n_vectors`` is that
+    table's row count — ``catalog.table_rows``, which counts once per
+    file signature, so plan-only tooling (plan_lint / gen_plans) and
+    multi-query sessions pay the count once per source, not once per
+    plan build."""
+    cent = _refined_centroids(emb, n_cells(n_vectors))
     cent_arr = cent.agg(
         F.collect_list(F.struct("cell", "cvec")).alias("cp_arr")
     )

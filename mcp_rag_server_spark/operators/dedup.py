@@ -28,7 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, table_rows
 from mcp_rag_server_spark.functions.vector import cosine_score, duckdb_cosine
 from mcp_rag_server_spark.registry import register
 from mcp_rag_server_spark.session import fanout_width, spread_scan
@@ -704,7 +704,7 @@ def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return (
-        _cell_scored_half(emb)
+        _cell_scored_half(emb, table_rows(spark, sf_dir, "embeddings"))
         .filter(F.col("score") >= COSINE_NEARDUP_THRESHOLD)
         .orderBy("vec_a", "vec_b")
     )
@@ -2734,6 +2734,11 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14: the registered view is spread_scan'd on doc_id so the serial
     fixture-scan stages (simhash token votes, md5(text) groups) and
     the minhash signature behind lsh_pairs_v all parallelize."""
+    # ONE doc_id spread feeds both the SQL stages and the pair-edge
+    # chain. The chain's own shingle-stage spread_scan stacks a second,
+    # same-width repartition directly on this one; Catalyst's
+    # CollapseRepartition folds the pair into one exchange (pinned by
+    # test_r15_optimizations::test_method_agreement_exchange_count).
     docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     docs.createOrReplaceTempView("documents")
     # The two checkpointed inputs are INDEPENDENT (LSH pairs need the

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, table_rows
 from mcp_rag_server_spark.functions.numeric import duckdb_dsum
 from mcp_rag_server_spark.functions.vector import (
     EMBEDDING_DIM,
@@ -615,7 +615,7 @@ gb_sym AS (
 )"""
 
 
-def _cell_scored_half(emb: DataFrame) -> DataFrame:
+def _cell_scored_half(emb: DataFrame, n_vectors: int) -> DataFrame:
     """(vec_a, vec_b, score): DISTINCT cell-blocked candidate pairs
     (clustering.cell_probes — vec_a < vec_b, pairs sharing a probed
     cell) scored ONCE with the rounded-4 cosine via id join-back,
@@ -624,7 +624,8 @@ def _cell_scored_half(emb: DataFrame) -> DataFrame:
     embedding-graph build here (sim_knn_graph / dd_embedding_neardup /
     sim_graph_greedy_search / sim_kcore_decompose) — never an
     all-pairs or fixture-label self-join. Callers cache or checkpoint
-    the result before mirroring it."""
+    the result before mirroring it; ``n_vectors`` is ``emb``'s row
+    count (:func:`clustering.cell_probes`' seed count)."""
     from mcp_rag_server_spark.operators.clustering import cell_probes
 
     # cache before the self-join: the probed assignment's lineage
@@ -637,7 +638,7 @@ def _cell_scored_half(emb: DataFrame) -> DataFrame:
     # an eager checkpoint would mint a fresh RDD per call and
     # re-materialize each time (measured: 9.8 s vs 8.2 s single-run,
     # 3.2 s vs 1.3 s steady on sim_knn_graph at sf0.1).
-    probed = cell_probes(emb).cache()
+    probed = cell_probes(emb, n_vectors).cache()
     a, b = probed.alias("a"), probed.alias("b")
     cand = (
         a.join(
@@ -741,7 +742,9 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-score + nbr_id total order making every neighbor list
     engine-identical."""
     emb = load_table(spark, sf_dir, "embeddings")
-    half = _cell_scored_half(emb).cache()
+    half = _cell_scored_half(
+        emb, table_rows(spark, sf_dir, "embeddings")
+    ).cache()
     sym = half.select(
         F.col("vec_a").alias("vec_id"),
         F.col("vec_b").alias("nbr_id"),
@@ -900,7 +903,9 @@ def sim_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    half = _cell_scored_half(emb).cache()
+    half = _cell_scored_half(
+        emb, table_rows(spark, sf_dir, "embeddings")
+    ).cache()
     sym = half.select(
         F.col("vec_a").alias("vec_id"),
         F.col("vec_b").alias("nbr_id"),
@@ -1066,7 +1071,9 @@ def sim_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical when they do. Round counts are calendar-bounded by
     KC_ROUNDS; production peels to fixpoint with the same loop."""
     emb = load_table(spark, sf_dir, "embeddings")
-    half = _cell_scored_half(emb).cache()
+    half = _cell_scored_half(
+        emb, table_rows(spark, sf_dir, "embeddings")
+    ).cache()
     sym = half.select(
         F.col("vec_a").alias("vec_id"),
         F.col("vec_b").alias("nbr_id"),

@@ -18,9 +18,10 @@ tests/test_cache_lifecycle.py, where the contract is spelled out.
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mcp_rag_server_spark.catalog import input_bytes
 
 #: Shuffle partitions default. On the test rig we size to the CPU count;
 #: on a real cluster this is overridden (rule of thumb: 2-3x total cores,
@@ -78,63 +79,25 @@ def fanout_width(spark: SparkSession, floor: int = 8) -> int:
 #: (w32 +26%/+33% slower on sim_kmeans_refine / sim_pq_adc_topk),
 #: lineitem 10.8 MB → 32 best. Spread tasks are compute-bound
 #: (explodes, md5/HOF folds over compressed columnar input), so the
-#: per-task byte target is far below the 128 MB scan-split target;
-#: parameterized for production re-tuning.
-_SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", str(50 * 1024))
-)
+#: per-task byte target is far below the 128 MB scan-split target.
+_SPREAD_TASK_BYTES = 50 * 1024
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """A byte-valued session conf, tolerating k/m/g-suffixed forms."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    if raw and raw[-1] in "kmgt":
-        mult = 1024 ** ("kmgt".index(raw[-1]) + 1)
-        raw = raw[:-1]
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
-def _scan_input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the files feeding ``df``'s scan, or None
-    when the lineage has no statable file source. Pure file-listing —
-    no Spark job runs."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = unquote(urlparse(path).path)
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
+def _sized_width(spark: SparkSession, nbytes: int) -> int:
+    """One task per :data:`_SPREAD_TASK_BYTES` of input, floored at 8,
+    capped at the cluster width."""
+    return min(fanout_width(spark), max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
 
 
 def spread_width(df: DataFrame) -> int:
     """The width :func:`spread_scan` would pick for ``df`` — for SQL
     REPARTITION-hint call sites (mid-statement spreads that cannot go
-    through spread_scan). Same sizing: one task per
-    :data:`_SPREAD_TASK_BYTES` of on-disk scan input, floored at 8,
-    capped at the cluster width; full cluster width when the input is
-    not a statable file scan."""
-    spark = df.sparkSession
-    cap = fanout_width(spark)
-    nbytes = _scan_input_bytes(df)
+    through spread_scan). Same sizing (:func:`_sized_width`); full
+    cluster width when the input is not a local file scan."""
+    nbytes = input_bytes(df)
     if nbytes is None:
-        return cap
-    return min(cap, max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
+        return fanout_width(df.sparkSession)
+    return _sized_width(df.sparkSession, nbytes)
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -166,10 +129,11 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
         sort-before-repartition pass and no SPARK-38388 retry hazard
         (zero keys is therefore a refused call, not a silent
         degradation);
-      - a frame whose lineage ALREADY carries a RepartitionByExpression
-        (a caller upstream spread it) is returned untouched: no double
-        exchange, and no ``.rdd`` inspection that would finalize an
-        AQE plan and run the upstream shuffle at construction time;
+      - a frame with no local file input (checkpointed / in-memory
+        lineage, or a non-local URI) is returned untouched: its layout
+        is whatever produced it, and measuring it (``.rdd``) would
+        finalize an AQE plan and run the upstream shuffle at
+        construction time;
       - keyed on the downstream window/groupBy key where one exists,
         the added exchange REPLACES the one EnsureRequirements would
         insert later (same total shuffle count, but it now carries the
@@ -186,26 +150,13 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
             "and the SPARK-38388 retry hazard this helper avoids)"
         )
     spark = df.sparkSession
-    cap = fanout_width(spark)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    if "RepartitionByExpression" in plan:
-        return df
-    nbytes = _scan_input_bytes(df)
+    nbytes = input_bytes(df)
     if nbytes is None:
-        # No statable file scan (checkpointed / in-memory lineage):
-        # the layout is whatever the materialization produced; measure
-        # it directly (safe here — no file-backed AQE exchange below).
-        if df.rdd.getNumPartitions() >= cap:
-            return df
-        width = cap
-    else:
-        max_split = _conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-        )
-        if -(-nbytes // max_split) >= cap:
-            return df
-        width = min(cap, max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
-    return df.repartition(width, *keys)
+        return df
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if -(-nbytes // max_split) >= fanout_width(spark):
+        return df
+    return df.repartition(_sized_width(spark, nbytes), *keys)
 
 
 def get_spark(

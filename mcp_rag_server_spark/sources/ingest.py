@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mcp_rag_server_spark.catalog import file_signature, input_bytes
 from mcp_rag_server_spark.functions.ids import dense_chunk_ids
 from mcp_rag_server_spark.functions.text import chunk_array
 from mcp_rag_server_spark.sources.files import (
@@ -441,13 +442,7 @@ def compact_store(
     data_dir = os.path.join(store_path, "chunks")
     _recover_interrupted_swap(data_dir)
     df = spark.read.parquet(data_dir)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(data_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
+    n_files = max(1, math.ceil((input_bytes(df) or 0) / target_file_bytes))
     staged = data_dir + ".compact.tmp"
     writer = (
         df.repartitionByRange(n_files, F.col(range_col))
@@ -474,10 +469,4 @@ def compact_store(
     # Same stale-FileStatusCache hazard as build(): a same-session reader
     # that already listed the store would otherwise see deleted files.
     spark.catalog.refreshByPath(data_dir)
-    written = [
-        f
-        for root, _, files in os.walk(data_dir)
-        for f in files
-        if f.endswith(".parquet")
-    ]
-    return len(written)
+    return len(file_signature(data_dir) or ())

@@ -2,9 +2,7 @@
 
 r15 made ``session.spread_scan`` width SIZE-AWARE (one task per
 ``_SPREAD_TASK_BYTES`` of on-disk scan input, floored at 8, capped at
-the cluster width) and idempotent (a frame whose lineage already
-carries a RepartitionByExpression is returned untouched — no double
-exchange, no AQE-finalizing ``.rdd`` probe). These tests pin:
+the cluster width). These tests pin:
 
 1. SIZING MATH: the width formula against the live fixture byte sizes
    (deficit regime → sized width; enough estimated splits → no-op).
@@ -14,7 +12,9 @@ exchange, no AQE-finalizing ``.rdd`` probe). These tests pin:
 3. WIDTH-INDEPENDENT VALUES: collected rows are identical across
    spread widths (the registry's per-row-math / order-free-aggregate
    determinism rule, now exercised explicitly for the spread class).
-4. GUARDS: zero keys raise; an already-spread frame is not re-spread.
+4. GUARDS: zero keys raise; dd_method_agreement, whose pair-edge
+   chain re-spreads its already-spread documents, keeps its exchange
+   count (Catalyst collapses the stacked repartition).
 """
 
 from __future__ import annotations
@@ -74,9 +74,14 @@ def test_spread_width_is_size_aware(spark, monkeypatch):
 def test_spread_noop_when_layout_fans_out(spark, monkeypatch):
     """Estimated splits >= cluster width → the scan is returned as-is
     (the production multi-split gate)."""
-    monkeypatch.setattr(session, "_conf_bytes", lambda *a: 1024)
-    df = load_table(spark, SF001, "lineitem")  # ~1 MB at sf0.01
-    assert spread_scan(df, "l_orderkey") is df
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        df = load_table(spark, SF001, "lineitem")  # ~1 MB at sf0.01
+        assert spread_scan(df, "l_orderkey") is df
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_spread_requires_keys(spark):
@@ -85,16 +90,28 @@ def test_spread_requires_keys(spark):
         spread_scan(df)
 
 
-def test_spread_is_idempotent(spark):
-    """A second spread on an already-spread lineage is a no-op — no
-    double exchange, and no AQE plan finalization at construction."""
-    df = load_table(spark, SF0001, "documents")
-    once = spread_scan(df, "doc_id")
-    assert spread_scan(once, "doc_id") is once
-    # survives a projection on top (the shingle-stage call pattern
-    # passes a spread view through select() before re-spreading)
-    projected = once.select("doc_id", "text")
-    assert spread_scan(projected, "doc_id") is projected
+def test_method_agreement_exchange_count(spark, monkeypatch):
+    """dd_method_agreement spreads documents once and hands the spread
+    frame to the pair-edge chain, whose shingle stage spreads it again.
+    The stacked same-width repartition must collapse into the first,
+    so the Exchange count over every plan the query materializes (its
+    three localCheckpoints plus the final plan) stays at its pinned
+    value."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    df = load_all()["dd_method_agreement"].spark_fn(spark, SF0001)
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
+    assert sorted(len(re.findall("Exchange", p)) for p in plans) == [1, 2, 9, 33]
 
 
 def test_spread_targets_keep_keyed_exchange_in_plan(spark):

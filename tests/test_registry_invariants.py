@@ -106,6 +106,26 @@ def test_no_session_conf_mutation_outside_session_module():
     assert offenders == [], offenders
 
 
+def test_file_stats_live_only_in_catalog():
+    """Which files back a table, how many bytes they hold and whether
+    they changed is decided ONLY in catalog.py (file_signature /
+    input_bytes / table_rows). Four modules once signed files on their
+    own, each with its own staleness and non-local-path gaps; a fifth
+    copy must go through the catalog instead."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mcp_rag_server_spark"
+    pat = re.compile(r"os\.stat\(|os\.path\.getsize\(|os\.walk\(|\.inputFiles\(")
+    offenders = [
+        f"{p.relative_to(pkg.parent)}:{lineno}: {line.strip()}"
+        for p in pkg.rglob("*.py")
+        if p.name != "catalog.py"
+        for lineno, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert offenders == [], offenders
+
+
 def test_no_fixture_tuned_fanout_literal():
     """Fan-out de-collapse hints must derive their width from the
     cluster (session.fanout_width), never a fixture-tuned literal
@@ -144,11 +164,10 @@ def test_no_fixture_tuned_fanout_literal():
 #: fetchdf() under the driver's string-level hash (the r11 full-registry
 #: type sweep found exactly these eight in the 302 outputs — no Float/
 #: Decimal/Date/Map/Binary/Array anywhere). A whitelist, not a
-#: blocklist, for the same reason _corpus_count's plan-node check is
-#: (r10): a blocklist silently goes stale the day a new fragile type
-#: ships; an over-strict whitelist just fails a test, and the fix is a
-#: one-line addition HERE after verifying the new type's rendering
-#: parity on both engines.
+#: blocklist (advice r10): a blocklist silently goes stale the day a
+#: new fragile type ships; an over-strict whitelist just fails a test,
+#: and the fix is a one-line addition HERE after verifying the new
+#: type's rendering parity on both engines.
 _RENDER_SAFE_LEAF_TYPES = frozenset(
     {
         "BooleanType",

@@ -6063,55 +6063,6 @@ def test_cell_probe_fold_matches_reference_list(spark):
         assert "cp_top" not in plan and "b1d" in plan, sf
 
 
-def test_cell_probe_corpus_count_memo(spark):
-    """cell_probes' construction-time corpus count is memoized per
-    input-file set: two plan builds over the same parquet source pay
-    one count job (plan-only tooling builds hundreds of plans per
-    session), and distinct sources get distinct entries."""
-    from mcp_rag_server_spark import catalog
-    from mcp_rag_server_spark.operators import clustering
-
-    clustering._COUNT_MEMO.clear()
-    emb1 = catalog.load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    emb2 = catalog.load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    n1 = emb1.count()
-    assert clustering._corpus_count(emb1) == n1
-    assert clustering._corpus_count(emb2) == emb2.count()
-    # same row COUNT at these two SFs, but distinct sources -> two keys
-    assert len(clustering._COUNT_MEMO) == 2
-    # keys carry (path, size, mtime) so an in-place single-file
-    # regeneration (same path, new stat) misses the stale entry
-    key1 = next(
-        k for k in clustering._COUNT_MEMO
-        if any("sf0.001" in part[0] for part in k)
-    )
-    assert all(part[1] > 0 and part[2] > 0 for part in key1), key1
-    # second resolution is a pure dict hit: poison the memo and verify
-    # the poisoned value is returned (no fresh count job re-runs)
-    clustering._COUNT_MEMO[key1] = n1 + 7
-    assert clustering._corpus_count(emb1) == n1 + 7
-    clustering._COUNT_MEMO.clear()
-    assert clustering._corpus_count(emb1) == n1
-    # a NON-bare-scan frame (Filter in the analyzed plan) bypasses the
-    # memo entirely: correct local count, no poisoning of the
-    # full-table entry in either direction
-    flt = emb1.filter("vec_id < 3")
-    before = dict(clustering._COUNT_MEMO)
-    assert clustering._corpus_count(flt) == 3
-    assert clustering._COUNT_MEMO == before
-    # count-safety is a WHITELIST (advice r10): a count-changing node
-    # the old blocklist never listed (Offset) must also bypass the
-    # memo — and a bare-scan entry must not be poisoned by it
-    off = emb1.offset(1)
-    n_off = clustering._corpus_count(off)
-    assert n_off == n1 - 1
-    assert clustering._COUNT_MEMO == before
-    # a per-row explode (Generate) changes count too — bypasses
-    gen = emb1.selectExpr("explode(embedding) AS x")
-    assert clustering._corpus_count(gen) == gen.count()
-    assert clustering._COUNT_MEMO == before
-
-
 def test_cell_probes_raises_on_null_embedding_element(spark):
     """The per-row fold's (Infinity, LONG_MAX) sentinel survives when a
     row's embedding contains NULL/NaN (the dd fold nulls for every
@@ -6153,8 +6104,8 @@ def _check_cell_probe_invariants(spark, sf):
     )
 
     emb = load_table(spark, sf, "embeddings")
-    rows = cell_probes(emb).collect()
     ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
+    rows = cell_probes(emb, len(ids)).collect()
     nlist = n_cells(len(ids))
     seed_ids = set(
         sorted(
