@@ -15,25 +15,27 @@ Reference parity:
     container ships no PDF library — the Spark-side plumbing (binary
     column in, text column out, Arrow-batched) is real either way.
 
-Scale shape: discovery is Spark's distributed file listing (the
-``binaryFile`` source with ``pathGlobFilter``, one listing job per
-extension, unioned). Metadata-only scans prune the ``content`` column at
-ReadSchema level, so "list 100 TB" reads no file bodies; the content
-pass happens once, after every path-level predicate is applied to the
-listing. Excluded-folder and dotfile predicates are path regexes —
-evaluated per file entry, never requiring IO.
+Scale shape: discovery is Spark's distributed file listing (one
+``binaryFile`` read whose ``pathGlobFilter`` is ``*.{ext1,ext2,…}``, so
+the whole allow-list is one listing and one scan). Metadata-only scans
+prune the ``content`` column at ReadSchema level, so "list 100 TB" reads
+no file bodies; the content pass happens once, after every path-level
+predicate is applied to the listing. Excluded-folder and dotfile
+predicates are path regexes — evaluated per file entry, never requiring
+IO. A refresh re-reads only the changed files: :func:`read_bodies` loads
+an explicit list of listing URIs (sources/ingest.py).
 """
 
 from __future__ import annotations
 
 import posixpath
 import re
-from collections.abc import Callable, Iterator
-from functools import reduce
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 #: Reference src/config.ts:54-87.
 DEFAULT_ALLOWED_EXT: tuple[str, ...] = (
@@ -74,6 +76,12 @@ def _glob_to_regex(pattern: str) -> str:
     return "".join(out)
 
 
+def _glob_escape(text: str) -> str:
+    """Backslash-escape the Hadoop glob metacharacters in ``text`` so a
+    glob (``pathGlobFilter`` or a ``load()`` path) matches it literally."""
+    return re.sub(r"([\\{}\[\]*?,])", r"\\\1", text)
+
+
 def rel_path_col(root: str) -> F.Column:
     """``file:`` URI → path relative to ``root`` (POSIX separators)."""
     root = root.rstrip("/")
@@ -82,50 +90,89 @@ def rel_path_col(root: str) -> F.Column:
     )
 
 
+def _binary_reader(spark: SparkSession, with_content: bool):
+    """A ``binaryFile`` reader. One that reads bodies opens each file
+    without Hadoop's local checksum layer: corpus files have no ``.crc``
+    sidecar to verify, and the layer's sidecar lookup cannot parse a file
+    name holding ``:`` (it fails the read). The layer is configured when
+    a file system is created, so this read gets uncached instances."""
+    reader = spark.read.format("binaryFile")
+    if with_content:
+        reader = reader.option("fs.file.checksum.verify", "false").option(
+            "fs.file.impl.disable.cache", "true"
+        )
+    return reader
+
+
 def discover_files(
     spark: SparkSession,
     root: str,
     allowed_ext: tuple[str, ...] = DEFAULT_ALLOWED_EXT,
     excluded_folders: tuple[str, ...] = DEFAULT_EXCLUDED_FOLDERS,
     with_content: bool = False,
+    with_uri: bool = False,
 ) -> DataFrame:
     """Reference ``discoverFiles`` (src/indexer.ts:350-387) as a Spark
-    listing job → DataFrame(rel_path, file_size[, content]).
+    listing job → DataFrame(rel_path, file_size[, content][, uri]).
 
-    One ``binaryFile`` read per allowed extension (``pathGlobFilter`` is
-    applied during listing, the Spark analog of fast-glob's pattern
-    expansion), unioned, then:
+    One ``binaryFile`` read with ``pathGlobFilter`` ``*.{ext1,ext2,…}``
+    over the deduplicated, glob-escaped allow-list (applied during
+    listing, the Spark analog of fast-glob's pattern expansion), then:
       - dotfile/dot-dir exclusion (fast-glob ``dot: false``),
       - excluded-folder regexes (src/indexer.ts:354-360),
       - size-0 skip (src/indexer.ts:374).
     With ``with_content=False`` the ``content`` column is pruned from
-    ReadSchema, so discovery never reads file bodies.
+    ReadSchema, so discovery never reads file bodies. ``uri`` is the
+    listing's file URI, the key :func:`read_bodies` loads a file by.
     """
+    exts = list(dict.fromkeys(allowed_ext))
+    if not exts:
+        raise ValueError("allowed_ext is empty")
     # A (re)scan must observe the current filesystem: Spark's
     # FileStatusCache would otherwise serve a stale listing for a root we
     # listed earlier in the session (the refresh path relies on seeing
     # adds/deletes — the reference re-walks the tree per build,
     # src/indexer.ts:415).
     spark.catalog.refreshByPath(root)
-    reads = [
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"*.{ext}")
+    df = (
+        _binary_reader(spark, with_content)
+        .option("pathGlobFilter", "*.{" + ",".join(map(_glob_escape, exts)) + "}")
         .option("recursiveFileLookup", "true")
         .load(root)
-        for ext in allowed_ext
-    ]
-    df = reduce(DataFrame.unionByName, reads)
-    rel = rel_path_col(root)
+    )
     df = df.select(
-        rel.alias("rel_path"),
+        rel_path_col(root).alias("rel_path"),
         F.col("length").alias("file_size"),
         *(["content"] if with_content else []),
+        *([F.col("path").alias("uri")] if with_uri else []),
     )
     # fast-glob dot:false — no path segment may start with ".".
     df = df.filter(~F.col("rel_path").rlike(r"(^|/)\.[^/]"))
     for folder in excluded_folders:
         df = df.filter(~F.col("rel_path").rlike(_glob_to_regex(folder)))
     return df.filter(F.col("file_size") > 0)
+
+
+def read_bodies(spark: SparkSession, root: str, uris: Iterable[str]) -> DataFrame:
+    """(rel_path, file_size, content) of exactly the files at ``uris``
+    (listing URIs from :func:`discover_files`): one ``binaryFile`` load
+    of the explicit paths, each glob-escaped so names holding ``[``,
+    ``{``, ``*`` or ``?`` are read literally. No directory is listed."""
+    return (
+        _binary_reader(spark, with_content=True)
+        .load([_glob_escape(u) for u in uris])
+        .select(
+            rel_path_col(root).alias("rel_path"),
+            F.col("length").alias("file_size"),
+            "content",
+        )
+    )
+
+
+def lists_pdf(allowed_ext: Iterable[str]) -> bool:
+    """Whether an allow-list can admit a file with a ``.pdf`` suffix
+    (case-insensitive, the test of :func:`is_pdf_col`)."""
+    return any(("." + ext).lower().endswith(".pdf") for ext in allowed_ext)
 
 
 def is_pdf_col(path_col: str = "rel_path") -> F.Column:
@@ -154,20 +201,37 @@ def _default_pdf_extractor(blobs: pd.Series) -> pd.Series:
 def decode_text(
     files: DataFrame,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
+    with_pdf: bool = True,
 ) -> DataFrame:
-    """(rel_path, file_size, content) → (rel_path, file_size, text).
+    """(rel_path, file_size, content, *extra) → (rel_path, file_size,
+    *extra, text).
 
     Text files: UTF-8 decode JVM-side (replacement-char convention
     matches Node, see module docstring). PDFs: routed through an
     Arrow-batched ``mapInPandas`` extractor; extraction failures and
     empty extractions null the row out, matching ``readFileContent``'s
     swallow-and-skip contract (src/indexer.ts:165-188). Rows with null
-    text are dropped (src/indexer.ts:267-269)."""
-    extractor = pdf_extractor or _default_pdf_extractor
-    text_part = files.filter(~is_pdf_col()).withColumn(
-        "text", F.decode("content", "UTF-8")
+    text are dropped (src/indexer.ts:267-269). ``with_pdf=False`` is for
+    inputs that hold no ``.pdf`` path: the extractor branch, and the
+    Python workers it starts, are then not planned at all."""
+    text_part = (
+        files.filter(~is_pdf_col())
+        .withColumn("text", F.decode("content", "UTF-8"))
+        .drop("content")
     )
-    out_schema = "rel_path string, file_size long, text string"
+    if with_pdf:
+        text_part = text_part.unionByName(_extract_pdfs(files, pdf_extractor))
+    return text_part.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+
+
+def _extract_pdfs(
+    files: DataFrame, pdf_extractor: Callable[[pd.Series], pd.Series] | None
+) -> DataFrame:
+    extractor = pdf_extractor or _default_pdf_extractor
+    out_schema = StructType(
+        [f for f in files.schema.fields if f.name != "content"]
+        + [StructField("text", StringType())]
+    )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -175,20 +239,9 @@ def decode_text(
                 texts = extractor(pdf["content"])
             except Exception:
                 texts = pd.Series([None] * len(pdf), dtype=object)
-            yield pd.DataFrame(
-                {
-                    "rel_path": pdf["rel_path"],
-                    "file_size": pdf["file_size"],
-                    "text": texts,
-                }
-            )
+            yield pdf.drop(columns="content").assign(text=texts)
 
-    pdf_part = files.filter(is_pdf_col()).mapInPandas(extract, schema=out_schema)
-    return (
-        text_part.drop("content")
-        .unionByName(pdf_part)
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    )
+    return files.filter(is_pdf_col()).mapInPandas(extract, schema=out_schema)
 
 
 def ensure_within_root(root: str, rel_path: str) -> str:

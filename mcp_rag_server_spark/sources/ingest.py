@@ -29,8 +29,13 @@ global ``row_number`` into per-file offsets (functions/ids.py): the only
 ordered computation is a running sum over one row per FILE, so no task
 ever sorts the full chunk set; the ids stay bit-identical to
 ``row_number() over (order by rel_path, chunk)`` for golden parity. The
-refresh path touches only the changed-file delta: two path-key joins
-(J1 anti, J2 outer) against a listing that read no file bodies.
+refresh path reads file bodies once, and only for the changed-file
+delta: one metadata-only listing (no file bodies) is compared with the
+store's per-path ``file_size`` in one small job whose result — the
+deleted paths and the changed/new paths with their listing URIs — comes
+back to the driver; survivors are the store filtered on those paths, and
+a ``binaryFile`` load of just the changed URIs is the only body read.
+``content_hash=True`` still reads every body once, to hash it.
 """
 
 from __future__ import annotations
@@ -53,6 +58,8 @@ from mcp_rag_server_spark.sources.files import (
     DEFAULT_EXCLUDED_FOLDERS,
     decode_text,
     discover_files,
+    lists_pdf,
+    read_bodies,
 )
 
 STORE_VERSION = 1
@@ -203,6 +210,7 @@ def _discover_texts(
     root: str,
     params: IngestParams,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
+    with_uri: bool = False,
 ) -> DataFrame:
     files = discover_files(
         spark,
@@ -210,11 +218,23 @@ def _discover_texts(
         allowed_ext=params.allowed_ext,
         excluded_folders=params.excluded_folders,
         with_content=True,
+        with_uri=with_uri,
     )
-    texts = decode_text(files, pdf_extractor=pdf_extractor)
+    texts = decode_text(
+        files, pdf_extractor=pdf_extractor, with_pdf=lists_pdf(params.allowed_ext)
+    )
+    return _with_hash(texts, params)
+
+
+def _with_hash(texts: DataFrame, params: IngestParams) -> DataFrame:
     if params.content_hash:
-        texts = texts.withColumn("content_sha", F.sha2(F.col("text"), 256))
+        return texts.withColumn("content_sha", F.sha2(F.col("text"), 256))
     return texts
+
+
+def _store_columns(params: IngestParams) -> list[str]:
+    base = ["id", "rel_path", "chunk", "text", "file_size", "line_count"]
+    return base + (["content_sha"] if params.content_hash else [])
 
 
 def cold_build(
@@ -226,12 +246,18 @@ def cold_build(
     """Full rebuild (reference cold path, indexer.ts:257-316):
     discover → read/extract → chunk → assign ids."""
     texts = _discover_texts(spark, root, params, pdf_extractor)
+    return _chunk_with_ids(texts, params)
+
+
+def _chunk_with_ids(
+    texts: DataFrame, params: IngestParams, start_id: int = 0
+) -> DataFrame:
     chunks = chunk_files(texts, params)
     if params.content_hash:
         # content_sha rides along in the store: it IS the change-detection
         # key on the next refresh.
         chunks = chunks.join(texts.select("rel_path", "content_sha"), "rel_path")
-    return _assign_ids(chunks)
+    return _assign_ids(chunks, start_id=start_id)
 
 
 def incremental_update(
@@ -241,74 +267,98 @@ def incremental_update(
     params: IngestParams = IngestParams(),
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
 ) -> DataFrame:
-    """Reference ``incrementalUpdate`` (indexer.ts:413-511) as delta joins:
+    """Reference ``incrementalUpdate`` (indexer.ts:413-511) as a MERGE
+    keyed on rel_path:
 
-    J1 (deleted):  old chunk paths LEFT ANTI current listing → dropped
-                   (indexer.ts:431-443).
+    J1 (deleted):  old chunk paths missing from the current listing →
+                   dropped (indexer.ts:431-443).
     J2 (changed):  current listing vs old per-path file_size; new path or
                    size mismatch → re-ingest that file (indexer.ts:446-462);
                    with ``content_hash`` the key is sha2(text) instead,
                    catching same-size edits the reference misses
                    (indexer.ts:410-411).
 
-    New chunk ids continue from max(old id)+1 (getMaxId()+1,
+    Both key sets come from one job over a listing that reads no file
+    bodies (with ``content_hash``, over every decoded body, since every
+    file must be hashed). Survivors are ``old_chunks`` minus those paths;
+    only the changed/new files are read, by URI, and re-chunked. New
+    chunk ids continue from max(surviving id)+1 (getMaxId()+1,
     indexer.ts:393-400), ordered by (rel_path, chunk) for determinism.
-    Only changed files are re-read/re-chunked; survivors pass through
-    untouched — at scale this is a MERGE keyed on rel_path.
+    With nothing deleted or changed the result is ``old_chunks`` itself.
+    As in the reference, a listed file that yields no text (a failed PDF
+    extraction) has no chunks, so it is re-read on every refresh.
     """
-    texts = _discover_texts(spark, root, params, pdf_extractor)
-    deleted_paths, delta_paths = _delta_paths(old_chunks, texts, params)
-
-    survivors = old_chunks.join(
-        deleted_paths.unionByName(delta_paths), "rel_path", "left_anti"
+    deleted, changed = _delta_paths(spark, old_chunks, root, params, pdf_extractor)
+    if not deleted and not changed:
+        return old_chunks
+    survivors = old_chunks.filter(~F.col("rel_path").isin(deleted + list(changed)))
+    out = survivors.select(*_store_columns(params))
+    if not changed:
+        return out
+    return out.unionByName(
+        _delta_chunks(spark, survivors, root, changed, params, pdf_extractor)
     )
-    new_chunks = _build_delta_chunks(survivors, texts, delta_paths, params)
-    return survivors.select(*new_chunks.columns).unionByName(new_chunks)
 
 
 def _delta_paths(
-    old_chunks: DataFrame, texts: DataFrame, params: IngestParams
-) -> tuple[DataFrame, DataFrame]:
-    """(deleted_paths, changed_or_new_paths) — the J1/J2 delta keys."""
-    change_key = "content_sha" if params.content_hash else "file_size"
-    old_by_path = old_chunks.groupBy("rel_path").agg(
-        F.first(change_key).alias(f"old_{change_key}")
-    )
-    listing = texts.select("rel_path", change_key).distinct()
-
-    # J1: chunks of files that no longer exist are dropped.
-    deleted = old_by_path.select("rel_path").join(
-        listing.select("rel_path"), "rel_path", "left_anti"
-    )
-    # J2: new files + changed files (key mismatch) are re-ingested.
-    delta = (
-        listing.join(old_by_path, "rel_path", "left_outer")
-        .filter(
-            F.col(f"old_{change_key}").isNull()
-            | (F.col(change_key) != F.col(f"old_{change_key}"))
-        )
-        .select("rel_path")
-    )
-    return deleted, delta
-
-
-def _build_delta_chunks(
-    survivors: DataFrame,
-    texts: DataFrame,
-    delta_paths: DataFrame,
+    spark: SparkSession,
+    old_chunks: DataFrame,
+    root: str,
     params: IngestParams,
-) -> DataFrame:
-    """Chunk + id-assign the changed/new files; ids continue from
-    max(surviving id)+1 (getMaxId()+1, indexer.ts:393-400)."""
-    delta_texts = texts.join(delta_paths, "rel_path", "left_semi")
-    delta_chunks = chunk_files(delta_texts, params)
+    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
+) -> tuple[list[str], dict[str, str]]:
+    """(deleted paths, {changed or new path: listing URI}) — the J1/J2
+    delta keys, collected to the driver in one job."""
     if params.content_hash:
-        delta_chunks = delta_chunks.join(
-            delta_texts.select("rel_path", "content_sha"), "rel_path"
+        change_key = "content_sha"
+        listing = _discover_texts(spark, root, params, pdf_extractor, with_uri=True)
+    else:
+        change_key = "file_size"
+        listing = discover_files(
+            spark,
+            root,
+            allowed_ext=params.allowed_ext,
+            excluded_folders=params.excluded_folders,
+            with_uri=True,
         )
+    old_by_path = old_chunks.groupBy("rel_path").agg(
+        F.first(change_key).alias("old_key")
+    )
+    rows = (
+        listing.select("rel_path", "uri", change_key)
+        .join(old_by_path, "rel_path", "full_outer")
+        .filter(
+            F.col("uri").isNull()
+            | F.col("old_key").isNull()
+            | (F.col(change_key) != F.col("old_key"))
+        )
+        .select("rel_path", "uri")
+        .collect()
+    )
+    deleted = sorted(r["rel_path"] for r in rows if r["uri"] is None)
+    changed = {r["rel_path"]: r["uri"] for r in rows if r["uri"] is not None}
+    return deleted, changed
+
+
+def _delta_chunks(
+    spark: SparkSession,
+    survivors: DataFrame,
+    root: str,
+    changed: dict[str, str],
+    params: IngestParams,
+    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
+) -> DataFrame:
+    """Read, chunk and id-assign just the changed/new files; ids continue
+    from max(surviving id)+1 (getMaxId()+1, indexer.ts:393-400)."""
+    files = read_bodies(spark, root, changed.values())
+    texts = decode_text(
+        files,
+        pdf_extractor=pdf_extractor,
+        with_pdf=any(p.lower().endswith(".pdf") for p in changed),
+    )
     max_id = survivors.agg(F.max("id")).first()[0]
     next_id = (max_id + 1) if max_id is not None else 0
-    return _assign_ids(delta_chunks, start_id=next_id)
+    return _chunk_with_ids(_with_hash(texts, params), params, start_id=next_id)
 
 
 def build(
@@ -335,15 +385,17 @@ def build(
         chunks = incremental_update(
             spark, old, root, params, pdf_extractor=pdf_extractor
         )
-        # The refresh reads the parquet dir it is about to replace, so
-        # write to a sibling dir first and swap — never collect() the
-        # table through the driver (it may be 100 TB).
-        next_dir = cur_dir + ".next"
-        chunks.write.mode("overwrite").parquet(next_dir)
-        shutil.rmtree(cur_dir, ignore_errors=True)
-        os.rename(next_dir, cur_dir)
-        with open(_meta_path(store_path), "w", encoding="utf-8") as f:
-            json.dump(_meta_dict(params), f)
+        # ``old`` itself back means nothing changed: leave the store as is.
+        if chunks is not old:
+            # The refresh reads the parquet dir it is about to replace, so
+            # write to a sibling dir first and swap — never collect() the
+            # table through the driver (it may be 100 TB).
+            next_dir = cur_dir + ".next"
+            chunks.write.mode("overwrite").parquet(next_dir)
+            shutil.rmtree(cur_dir, ignore_errors=True)
+            os.rename(next_dir, cur_dir)
+            with open(_meta_path(store_path), "w", encoding="utf-8") as f:
+                json.dump(_meta_dict(params), f)
     # The swap replaced files under a path Spark may have listed; drop the
     # stale listing before handing back a reader.
     spark.catalog.refreshByPath(cur_dir)
@@ -366,34 +418,36 @@ def _refresh_buckets(
     tests/test_ingest.py)."""
     import shutil
 
-    texts = _discover_texts(spark, root, params, pdf_extractor)
-    deleted_paths, delta_paths = _delta_paths(old, texts, params)
-    affected_paths = deleted_paths.unionByName(delta_paths)
+    deleted, changed = _delta_paths(spark, old, root, params, pdf_extractor)
+    affected_paths = deleted + list(changed)
+    if not affected_paths:
+        return
     affected = [
         r["b"]
-        for r in affected_paths.select(
-            _bucket_col(params.n_buckets).alias("b")
+        for r in spark.createDataFrame(
+            [(p,) for p in affected_paths], "rel_path string"
         )
+        .select(_bucket_col(params.n_buckets).alias("b"))
         .distinct()
         .collect()
     ]
-    if not affected:
-        return
     # Survivors *within affected buckets only* + re-ingested delta chunks;
     # ids continue past the GLOBAL max so they never collide with ids in
     # untouched buckets.
-    surv_aff = old.filter(F.col("bucket").isin(affected)).join(
-        affected_paths, "rel_path", "left_anti"
+    kept = ~F.col("rel_path").isin(affected_paths)
+    out = old.filter(F.col("bucket").isin(affected) & kept).select(
+        *_store_columns(params)
     )
-    # Ids continue from the max over GLOBAL survivors — the same rule as
-    # the flat incremental path, so both layouts produce identical ids.
-    global_survivors = old.join(affected_paths, "rel_path", "left_anti")
-    new_chunks = _build_delta_chunks(global_survivors, texts, delta_paths, params)
-    out = (
-        surv_aff.select(*new_chunks.columns)
-        .unionByName(new_chunks)
-        .withColumn("bucket", _bucket_col(params.n_buckets))
-    )
+    if changed:
+        # Ids continue from the max over GLOBAL survivors — the same rule
+        # as the flat incremental path, so both layouts produce identical
+        # ids.
+        out = out.unionByName(
+            _delta_chunks(
+                spark, old.filter(kept), root, changed, params, pdf_extractor
+            )
+        )
+    out = out.withColumn("bucket", _bucket_col(params.n_buckets))
     delta_dir = os.path.join(store_path, "chunks.delta")
     out.write.mode("overwrite").partitionBy("bucket").parquet(delta_dir)
     cur_dir = os.path.join(store_path, "chunks")

@@ -24,7 +24,9 @@ from mcp_rag_server_spark.operators.fileops import (
     list_files,
     read_file,
 )
+from mcp_rag_server_spark.plans.inspect import tree_section
 from mcp_rag_server_spark.sources.files import (
+    DEFAULT_ALLOWED_EXT,
     discover_files,
     ensure_within_root,
     normalize_rel_path,
@@ -64,8 +66,6 @@ CORPUS = {
     "image.bin": "not allowed ext",
 }
 
-# Small ext list: discovery runs one listing job per extension, and the
-# full 29-ext default makes the test suite needlessly slow.
 TEST_EXTS = ("md", "py", "txt", "yaml", "js", "pdf")
 PARAMS = IngestParams(chunk_size=120, chunk_overlap=30, allowed_ext=TEST_EXTS)
 
@@ -102,6 +102,38 @@ def test_discovery_filters(spark, corpus_dir):
         rel: len(text.encode()) for rel, text in expected_files().items()
     }
     assert got == exp
+
+
+def test_discovery_is_one_globbed_scan(spark, tmp_path):
+    """The whole allow-list is one ``binaryFile`` scan, and it lists the
+    same rows as a union of one scan per distinct extension — overlapping
+    extensions (ts/tsx, yml/yaml), a duplicated extension and case
+    included."""
+    names = [
+        "a.ts", "b.tsx", "c.yml", "d.yaml", "e.md", "f.py", "g.txt",
+        "h.TS", "sub/i.ts", "sub/j.tsx.bak", "k.json", "l.pdf",
+    ]
+    for name in names:
+        p = tmp_path / name
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text("x" * (len(name) + 1))
+    root = str(tmp_path)
+
+    def rows(exts):
+        return sorted(map(tuple, discover_files(spark, root, allowed_ext=exts).collect()))
+
+    def union(exts):
+        return sorted(row for ext in dict.fromkeys(exts) for row in rows((ext,)))
+
+    six = ("ts", "tsx", "yml", "yaml", "md", "py")
+    for exts in (("md",), six, DEFAULT_ALLOWED_EXT):
+        plan = tree_section(discover_files(spark, root, allowed_ext=exts))
+        assert plan.count("Scan binaryFile") == 1, plan
+    assert rows(six) == union(six)
+    assert rows(DEFAULT_ALLOWED_EXT) == union(DEFAULT_ALLOWED_EXT)
+    assert [r[0] for r in rows(("md", "py", "md"))] == ["e.md", "f.py"]
+    assert rows(("md", "py", "md")) == union(("md", "py", "md"))
+    assert [r[0] for r in rows(("ts",))] == ["a.ts", "sub/i.ts"]
 
 
 def test_cold_build_matches_reference_chunker(spark, corpus_dir):
@@ -247,6 +279,110 @@ def test_pdf_plumbing_with_injected_extractor(spark, tmp_path):
     by_path = {r["rel_path"]: r for r in chunks}
     assert by_path["doc.pdf"]["text"] == "PDFTEXT(29 bytes)"
     assert by_path["plain.txt"]["text"] == "plain text"
+
+
+def test_cold_build_without_pdf_ext_plans_no_python(spark, corpus_dir):
+    """An allow-list that cannot admit a ``.pdf`` file plans no PDF
+    extractor branch, so the cold build starts no Python worker."""
+    md_only = IngestParams(chunk_size=120, chunk_overlap=30, allowed_ext=("md",))
+    plan = tree_section(cold_build(spark, corpus_dir, md_only))
+    assert "MapInPandas" not in plan and "Python" not in plan, plan
+    assert "MapInPandas" in tree_section(cold_build(spark, corpus_dir, PARAMS))
+
+
+def _store_files(store: str) -> dict[str, int]:
+    data_dir = os.path.join(store, "chunks")
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(data_dir)
+        for f in fs
+    }
+
+
+def test_no_change_refresh_writes_nothing(spark, corpus_dir, tmp_path):
+    import shutil
+
+    root = str(tmp_path / "same")
+    store = str(tmp_path / "same_store")
+    shutil.copytree(corpus_dir, root)
+    first = sorted(map(tuple, build(spark, root, store, PARAMS).collect()))
+    before = _store_files(store)
+    second = sorted(map(tuple, build(spark, root, store, PARAMS).collect()))
+    assert _store_files(store) == before
+    assert second == first
+
+
+def _logging_extractor(log_path: str):
+    """A PDF extractor that appends every blob it is handed to a log."""
+
+    def extract(blobs: pd.Series) -> pd.Series:
+        with open(log_path, "a", encoding="utf-8") as log:
+            for b in blobs:
+                log.write(bytes(b).decode() + "\n")
+        return blobs.map(lambda b: "TEXT " + bytes(b).decode())
+
+    return extract
+
+
+def test_refresh_extracts_only_the_delta(spark, tmp_path):
+    """After editing one of N PDFs, the refresh hands only that file's
+    body to the extractor — no other body is read. (The write plans the
+    delta texts twice, for the id offsets and for the chunk rows, so the
+    one body may be extracted more than once.)"""
+    root = tmp_path / "pdfs"
+    root.mkdir()
+    n = 5
+    for i in range(n):
+        (root / f"doc{i}.pdf").write_bytes(f"%PDF doc {i}".encode())
+    log = tmp_path / "extracted.log"
+    extractor = _logging_extractor(str(log))
+    store = str(tmp_path / "pdf_store")
+    build(spark, str(root), store, PARAMS, pdf_extractor=extractor)
+    assert sorted(set(log.read_text().splitlines())) == [
+        f"%PDF doc {i}" for i in range(n)
+    ]
+
+    log.write_text("")
+    (root / "doc2.pdf").write_bytes(b"%PDF doc 2, edited")
+    out = build(spark, str(root), store, PARAMS, pdf_extractor=extractor)
+    assert set(log.read_text().splitlines()) == {"%PDF doc 2, edited"}
+    texts = {r["rel_path"]: r["text"] for r in out.collect()}
+    assert texts == {
+        f"doc{i}.pdf": "TEXT %PDF doc " + ("2, edited" if i == 2 else str(i))
+        for i in range(n)
+    }
+
+
+def test_refresh_with_odd_file_names(spark, tmp_path):
+    """Names holding glob metacharacters, ``:``, ``%20``, ``#``, ``,`` and
+    spaces survive listing → delta → body read: edit one, add one,
+    delete one, and the refreshed store equals a cold build."""
+    root = tmp_path / "odd"
+    names = [
+        "a[1].md", "b{x,y}.md", "c*.md", "d?.md", "e:f.md", "g%20h.md",
+        "i j.md", "k#l.md", "sub dir/[z].md",
+    ]
+    for name in names:
+        p = root / name
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(f"body of {name}\n" * 3)
+    store = str(tmp_path / "odd_store")
+    build(spark, str(root), store, PARAMS)
+
+    (root / "b{x,y}.md").write_text("edited " * 30)
+    (root / "new [*?] 50%20.md").write_text("added file")
+    (root / "e:f.md").unlink()
+    out = build(spark, str(root), store, PARAMS)
+
+    cols = ["rel_path", "chunk", "text", "file_size", "line_count"]
+    got = sorted(map(tuple, out.select(*cols).collect()))
+    want = sorted(map(tuple, cold_build(spark, str(root), PARAMS).select(*cols).collect()))
+    assert got == want
+    paths = {r[0] for r in got}
+    assert "new [*?] 50%20.md" in paths and "e:f.md" not in paths
+    assert [r[2] for r in got if r[0] == "b{x,y}.md"][0].startswith("edited")
+    ids = [r["id"] for r in out.collect()]
+    assert len(ids) == len(set(ids))
 
 
 def test_read_file_line_ranges(spark, corpus_dir):
