@@ -3,9 +3,9 @@
 ``entry(spark)`` runs the flagship query (brute-force cosine top-k, the
 reference's rag_query core) at sf0.001. ``queries()`` / ``oracle_sql()``
 are derived from the central registry in
-``mcp_rag_server_spark/registry.py`` — every operator registers its
-Spark callable and DuckDB oracle SQL together, so the two dicts are
-always in sync.
+``mcp_rag_server_spark/registry.py`` and list every query in
+registration order — every operator registers its Spark callable and
+DuckDB oracle SQL together, so the two dicts are always in sync.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mcp_rag_server_spark.registry import load_all, ordered_registry  # noqa: E402
+from mcp_rag_server_spark.registry import load_all  # noqa: E402
 from mcp_rag_server_spark.session import ensure_session_confs  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
@@ -46,12 +46,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so
-    stale / changed / new queries come first (the driver checks a prefix
-    of this dict in insertion order)."""
+    """One entry per registered query, in registration order; each
+    callable applies the session confs the operators assume first."""
     return {
         name: _with_session_confs(spec.spark_fn)
-        for name, spec in ordered_registry().items()
+        for name, spec in load_all().items()
     }
 
 
@@ -59,6 +58,6 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL for every SQL-expressible query."""
     return {
         name: spec.oracle
-        for name, spec in ordered_registry().items()
+        for name, spec in load_all().items()
         if spec.oracle is not None
     }

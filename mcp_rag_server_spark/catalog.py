@@ -181,10 +181,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     if isinstance(dt, T.TimestampNTZType):
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view so operators can be
-    expressed in pure Spark SQL when that is clearer than DataFrame ops."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -37,7 +37,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import input_bytes, load_table
 from mcp_rag_server_spark.functions.numeric import finite_col
 from mcp_rag_server_spark.functions.text import chunk_stride
 from mcp_rag_server_spark.registry import register
@@ -272,10 +272,10 @@ def _failing_pdf_extractor(blobs) -> "pd.Series":  # noqa: F821
 def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same cold-build → mutate → delta-refresh as ingest_roundtrip, then
     compact the fragmented store (the refresh appends per-delta files)
-    with a small target size so the rewrite genuinely restructures
-    (multiple range-disjoint output files), and return the table READ
-    BACK THROUGH load_store — the row the driver hashes has the
-    compacted layout in its lineage, so a compaction that drops,
+    with a target of a third of its size so the rewrite genuinely
+    restructures (multiple range-disjoint output files), and return the
+    table READ BACK THROUGH load_store — the rows the oracle check hashes
+    have the compacted layout in their lineage, so a compaction that drops,
     duplicates, or reorders rows fails the oracle, not just a pytest.
 
     The allow-list includes ``pdf`` and both builds inject a FAILING
@@ -307,7 +307,12 @@ def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
     _mutate_corpus_v2(root, docs)
     build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
-    n_files = compact_store(spark, store, target_file_bytes=96 * 1024)
+    # A third of the fragmented store's bytes: the builds' file count,
+    # and so the store's size, follows the core count (6 files / 81 KB
+    # at local[3], 15 files / 103 KB at local[8] on sf0.001), so a fixed
+    # target left a single file on small sessions.
+    stored = input_bytes(load_store(spark, store, params))
+    n_files = compact_store(spark, store, target_file_bytes=stored // 3)
     if n_files < 2:
         raise RuntimeError(
             f"compaction wrote {n_files} file(s); target_file_bytes too"

@@ -71,87 +71,6 @@ def register(
     return deco
 
 
-#: Driver-evidence priority (round 14 rotation, re-regenerated at
-#: round END after the optimization phase's last logic-touching
-#: commit — the tpch_q21 checkpoint overlap): the driver checks a
-#: 50-query prefix of this ordering. Steady-state cadence
-#: (COVERAGE.md "Rotation cadence"): NOT-GREEN rows first (none),
-#: then never-checked (none), then stale chains oldest evidence
-#: first — the 45 queries whose logic chains the r14 optimization
-#: edits touched (the shared spread_scan / minhash-signature /
-#: cell-blocked stages put whole dd_/ev_ families here, plus the
-#: checkpointed ev_ivm/rag_mmr/ta_bpe/tpch_q1/q21 and the
-#: NULL-hour-gated five) — then the freshness refresh (the five
-#: oldest fresh rows). Regenerate with
-#: `python3 tools/rotation_audit.py`, do not hand-maintain.
-DRIVER_PRIORITY: tuple[str, ...] = (
-    "dd_semdedup",
-    "sim_compression_frontier",
-    "dd_cluster_aware_sample",
-    "dd_cluster_size_hist",
-    "dd_connected_components",
-    "dd_cross_source_matrix",
-    "dd_graph_degree_stats",
-    "dd_graph_triangles",
-    "dd_incremental_minhash",
-    "dd_jaccard_same_source",
-    "dd_keep_canonical",
-    "dd_lsh_band_audit",
-    "dd_method_agreement",
-    "dd_minhash_bbit_audit",
-    "dd_minhash_est_audit",
-    "dd_minhash_lsh",
-    "dd_simhash",
-    "dd_soft_dedup_weights",
-    "dd_threshold_sweep",
-    "sim_ivfpq_topk",
-    "sim_kmeans_refine",
-    "sim_pq_adc_topk",
-    "ta_bpe_apply",
-    "ta_bpe_train",
-    "ta_dataset_card",
-    "ta_leakage_safe_split",
-    "ta_winnowing_fingerprint",
-    "top_parts_by_revenue",
-    "tpch_q1",
-    "tpch_q21_waiting_orders",
-    "agg_string_concat_nations",
-    "dd_exact_stats",
-    "grouping_sets_sales",
-    "pivot_status_by_priority",
-    "rag_topk",
-    "sim_ann_topk",
-    "sim_radius_search",
-    "sql_rag_topk",
-    "st_latest_state",
-    "ta_bigram_top",
-    "ta_dedup_budget_pipeline",
-    "ta_filter_pipeline",
-    "ta_langid_heuristic",
-    "ta_quality_score",
-    "ta_repetition_stats",
-    "ta_stratified_sample",
-    "ta_tfidf_top",
-    "ta_token_stats",
-    "tj_range_pairs_5min",
-    "tpch_q12_late_shipment_priority",
-)
-
-
-def ordered_registry() -> dict[str, QuerySpec]:
-    """Registry re-keyed so DRIVER_PRIORITY names come first (in that
-    order), then every remaining query in registration order."""
-    reg = load_all()
-    out: dict[str, QuerySpec] = {}
-    for name in DRIVER_PRIORITY:
-        if name in reg:
-            out[name] = reg[name]
-    for name, spec in reg.items():
-        if name not in out:
-            out[name] = spec
-    return out
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration) and
     return the registry."""

@@ -77,7 +77,7 @@ except ImportError:  # pragma: no cover
 #: at call time (py4j resolves attributes lazily, so the miss only
 #: surfaces on invocation). Both mean "introspection internals moved",
 #: not "cache contract broken" — skip, don't error: the contract
-#: itself stays covered by tools/reinvoke_audit.py via public API.
+#: itself stays covered by `tools/oracle_replay.py --twice` via public API.
 _INTERNALS_MOVED = (AttributeError,) + (
     (Py4JError,) if isinstance(Py4JError, type) else ()
 )

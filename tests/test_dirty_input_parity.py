@@ -3,15 +3,16 @@
 Every other correctness modality runs on the clean driver fixtures;
 this suite pins the engine's dirty-input contract, established in
 round 11 by sweeping all registered queries over a corrupted variant
-of sf0.001 (tools/dirty_sweep.py — 300/304 MATCH, 4 documented-loud
-BOTH_ERR: the probe quartet refuses on BOTH engines by name):
+of sf0.001 (`tools/oracle_replay.py --sf dirty` — 300/304 MATCH, 4
+documented-loud BOTH_ERR: the probe quartet refuses on BOTH engines by
+name):
 
 1. PARITY — a representative query per fixed failure class must still
    hash-match its DuckDB oracle when the tables contain NULL join
    keys, NULL/empty/whitespace/unicode text, NULL/zero/ragged/
    NaN-element embeddings, malformed JSON, and NULL timestamps.
    (The full-registry dirty replay is a per-round tool run, not a
-   pytest: `python tools/dirty_sweep.py`.)
+   pytest: `python tools/oracle_replay.py --sf dirty`.)
 2. LOUD — the IVF probe family (clustering.cell_probes consumers)
    has a documented non-null input contract and must RAISE its
    sentinel guard on a corpus with a NaN/NULL-element embedding,
@@ -139,11 +140,11 @@ PARITY_QUERIES = (
 #: NULL order key nondeterministically (4 distinct value sets in 12
 #: runs of the unfixed ev_rolling_median oracle; threads=1 is stable),
 #: and the most common placement coincides with Spark's NULLS FIRST —
-#: which is why dirty_sweep usually read MATCH and the r12 full sweeps
-#: mismatched a roving victim. The ts IS NOT NULL gate removes the
+#: which is why the dirty replay usually read MATCH and the r12 full
+#: sweeps mismatched a roving victim. The ts IS NOT NULL gate removes the
 #: NULL hour from the series entirely (same gap-compression contract
 #: as _HOURLY_SEQ_CTE); this pin asserts thread-count invariance, the
-#: detector for the whole class (tools/oracle_jitter_sweep.py).
+#: detector for the whole class (`tools/oracle_replay.py --jitter`).
 JITTER_QUERIES = (
     "ev_rolling_median",
     "ev_seasonal_decompose",
@@ -207,7 +208,7 @@ def test_dirty_parity(name, spark, dirty_dir, dirty_duck):
 
 @pytest.mark.parametrize("name", JITTER_QUERIES)
 def test_oracle_thread_count_invariant_on_dirty(name, dirty_dir):
-    from tools.oracle_jitter_sweep import _run
+    from tools.oracle_replay import duck_rows as _run
 
     spec = load_all()[name]
     multi = _run(spec.oracle, dirty_dir, None)

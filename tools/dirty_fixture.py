@@ -1,18 +1,18 @@
 """Dirty-input fixture: derive an adversarial variant of an sf dir.
 
-Every verification modality so far (verify_contract, cross_sf_sweep,
-partition_sweep, no-codegen, plan lint, parallelism audit) runs on the
-CLEAN driver fixtures — rows the generators made well-formed. At 100 TB
-the interesting rows are the other kind: NULL join keys, NULL/empty/
-whitespace/unicode-junk text, NULL and zero and ragged embeddings,
+The other verification modalities (the oracle replay at each scale,
+partition layout and codegen mode, plan lint, parallelism audit) run on
+the CLEAN fixtures — rows the generators made well-formed. At
+100 TB the interesting rows are the other kind: NULL join keys,
+NULL/empty/whitespace/unicode-junk text, NULL and zero and ragged embeddings,
 malformed JSON props, NULL timestamps. This module derives a dirty
 variant of sf0.001 with those rows APPENDED (clean rows untouched, so
 every query still has signal) and schemas byte-identical, which means
 both engines of the oracle-parity gate can run on it unmodified:
-`tools/dirty_sweep.py` replays the full registry on the dirty dir and
-classifies each query MATCH / MISMATCH / SPARK_ERR / ORACLE_ERR, and
-`tests/test_dirty_input_parity.py` pins the adjudicated contract per
-query family.
+`tools/oracle_replay.py --sf dirty` replays the full registry on the
+dirty dir and classifies each query MATCH / MISMATCH / SPARK_ERR /
+ORACLE_ERR / BOTH_ERR, and `tests/test_dirty_input_parity.py` pins the
+adjudicated contract per query family.
 
 Injection is deterministic (fixed ids, fixed payloads, no RNG) so the
 sweep's classifications are stable across sessions and the test's
